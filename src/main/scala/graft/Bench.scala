@@ -54,19 +54,21 @@ object Bench {
 
   /** Pack the driver-parsed one-line JSON record. Pure so
     * BenchRecordSpec can pin the packing behavior. `ordered` must
-    * already be in keep-priority order; entries are kept greedily until
-    * the budget is hit and the rest are counted in "omitted". */
+    * already be in keep-priority order; entries are kept until the
+    * first one that does not fit, so the kept entries are always a
+    * prefix of that order, and the rest are counted in "omitted". */
   private[graft] def packLine(total: Double, ordered: Seq[(String, Double)],
       fixedTail: String, budget: Int): String = {
     val head = s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","queries":{"""
     val entries = ordered.map { case (k, v) => s"\"" + k + "\":" + fmt2(v) }
     var line = head
     var kept = 0
-    entries.foreach { e =>
-      val sep = if (kept == 0) "" else ","
-      if (line.length + sep.length + e.length + 1 + fixedTail.length + 16 <= budget) {
-        line += sep + e; kept += 1
-      }
+    var full = false
+    while (!full && kept < entries.length) {
+      val next = (if (kept == 0) "" else ",") + entries(kept)
+      if (line.length + next.length + 1 + fixedTail.length + 16 <= budget) {
+        line += next; kept += 1
+      } else full = true
     }
     val omitted = entries.length - kept
     line + "}" + (if (omitted > 0) s""","omitted":$omitted""" else "") + fixedTail

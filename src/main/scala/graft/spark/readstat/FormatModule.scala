@@ -5,9 +5,10 @@ import org.apache.spark.sql.types.StructType
 
 /** One statistical-file format (dta/sav/sas7bdat/xpt/por) as seen by the
   * DSv2 connector: driver-side schema + partition planning, executor-side
-  * row decoding. Implementations must keep `metadata` cheap (header/meta
-  * parse only — no data read) because it runs at planning time, and
-  * `rows` embarrassingly parallel across disjoint row ranges.
+  * columnar decoding. Implementations must keep `metadata` cheap
+  * (header/meta parse only — no data read) because it runs at planning
+  * time, and [[columnarRows]] embarrassingly parallel across disjoint
+  * row ranges.
   */
 trait FormatModule extends Serializable {
 
@@ -66,12 +67,6 @@ trait FormatModule extends Serializable {
     }
   }
 
-  /** Decode one partition, emitting only `required` columns (names are a
-    * subset of `schema`, in requested order). Runs on executors.
-    */
-  def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow]
-
   /** Exact total data-row count when obtainable from metadata alone
     * (header fields, record-length arithmetic, page indexes) — the basis
     * for COUNT(*) aggregate pushdown, where a count never touches row
@@ -91,19 +86,42 @@ trait FormatModule extends Serializable {
     * those). Must never throw on a file whose [[schema]] parsed. */
   def salvageableRowCount(path: String, opts: ReadstatOptions): Option[Long] = None
 
-  /** Whether [[columnarRows]] can serve this (path, options, schema)
-    * combination. Must be cheap — called at planning time. */
-  def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = false
+  /** Whether [[columnarRows]] decodes `required` as declared: every
+    * field is a column of the file's natural schema with its natural
+    * type, and no type-reshaping regime (compress, schema overrides) is
+    * on. The connector reshapes everything else on the batches
+    * ([[BatchReshape]]) and decodes the natural columns. */
+  final def supportsColumnar(path: String, opts: ReadstatOptions,
+      required: StructType): Boolean = {
+    if (opts.compress || opts.schemaOverrides.nonEmpty) return false
+    val byName = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
+    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
+  }
 
-  /** Vectorized decode: per-column tight loops into
-    * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es, skipping the
-    * per-cell dispatch and boxing of the row path (the same reason
-    * Spark's parquet reader is columnar). Only called when
-    * [[supportsColumnar]] returned true. */
+  /** Decode one partition into
+    * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es holding only
+    * the `required` columns (a subset of the natural `schema`, in
+    * requested order) with per-column tight loops. Runs on executors.
+    *
+    * Implementations that honor `pushed` must only SKIP rows the filters
+    * definitely reject (Catalyst re-applies the residual predicate, so
+    * emitting extra rows is always safe — dropping a passing row never
+    * is). */
   def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    throw new UnsupportedOperationException("no columnar decode")
+      required: StructType,
+      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]
+
+  /** [[columnarRows]] viewed row by row, for the driver-side compress
+    * probe and direct decoder tests. The rows are views into the current
+    * batch: read each before advancing. */
+  final def rows(part: RangePartition, opts: ReadstatOptions,
+      required: StructType,
+      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : Iterator[InternalRow] = {
+    import scala.jdk.CollectionConverters._
+    columnarRows(part, opts, required, pushed).flatMap(_.rowIterator().asScala)
+  }
 
   /** Whether this module can evaluate the pushed filter against its
     * decoded output values (the basis of the scan builder's
@@ -114,27 +132,8 @@ trait FormatModule extends Serializable {
     * rows. See [[PushedFilters]]. */
   def canEvalFilter(path: String, opts: ReadstatOptions,
       filter: org.apache.spark.sql.sources.Filter): Boolean = false
-
-  /** Filter-aware row decode: implementations that honor `pushed` must
-    * only SKIP rows the filters definitely reject (Catalyst re-applies
-    * the residual predicate, so emitting extra rows is always safe —
-    * dropping a passing row never is). Default ignores the filters. */
-  def rows(part: RangePartition, opts: ReadstatOptions, required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] =
-    rows(part, opts, required)
-
-  /** Filter-aware columnar decode; same contract as the row overload. */
-  def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter])
-      : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required)
 }
 
-/** Decoder state at a row boundary of a compressed SPSS stream: the
-  * uncompressed-logical offset of the next byte, plus the pending
-  * control-byte group. Lets an executor start decoding mid-stream
-  * without replaying everything before its range. */
 /** THE integral-rendering rule for numeric value-label codes: exact
   * integers print without a decimal point (the form label tables key
   * on), the 1e15 guard keeps huge doubles off the lossy Long render.
@@ -146,6 +145,10 @@ private[readstat] object NumRender {
     else d.toString
 }
 
+/** Decoder state at a row boundary of a compressed SPSS stream: the
+  * uncompressed-logical offset of the next byte, plus the pending
+  * control-byte group. Lets an executor start decoding mid-stream
+  * without replaying everything before its range. */
 final case class SavCheckpoint(uOff: Long, ctrl: Array[Byte], ctrlI: Int)
 
 /** Decoder state at a row boundary of a POR stream: file byte offset,
@@ -206,11 +209,6 @@ final case class ReadstatOptions(
     compressStringToNumeric: Boolean = true,
     schemaOverrides: String = "",
     mergeSchema: Boolean = false,
-    // debugging / parity escape hatch: force the row decode path (the
-    // ColumnarParitySpec harness pins batch==row values with it; before
-    // r13 a no-op schemaOverride served this purpose, but reshaping
-    // regimes now decode columnar too)
-    columnarEnabled: Boolean = true,
     // 0 = admit new stream files immediately (this library's writers
     // rename atomically into place and .inprogress temps are filtered,
     // so presence == completeness — same contract as Spark's built-in
@@ -297,7 +295,6 @@ object ReadstatOptions {
       compressStringToNumeric = b("compressStringToNumeric", dflt = true),
       schemaOverrides = Option(m.get("schemaOverrides")).getOrElse(""),
       mergeSchema = b("mergeSchema", dflt = false),
-      columnarEnabled = b("columnar", dflt = true),
       streamStabilityMs = parse("streamStabilityMs", 0L)(_.toLong),
       mode = parse("mode", defaultMode(m)) { v =>
         val norm = v.toLowerCase

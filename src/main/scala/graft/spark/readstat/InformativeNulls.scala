@@ -1,8 +1,8 @@
 package graft.spark.readstat
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The three informative-null output shapes of the reference
@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Struct/merged are a pure reshaping of the separate-column output, so
   * they live here in the connector layer: the modules always decode
-  * separate columns and the partition reader combines them.
+  * separate columns and [[BatchReshape]] combines their vectors.
   */
 object InformativeNulls {
 
@@ -65,75 +65,61 @@ object InformativeNulls {
     })
   }
 
-  private sealed trait OutCol
-  private final case class Pass(midIdx: Int) extends OutCol
-  private final case class AsStruct(mainIdx: Int, indIdx: Int, innerType: DataType)
-    extends OutCol
-  private final case class AsMerged(mainIdx: Int, indIdx: Int, mainType: DataType)
-    extends OutCol
+  /** `struct` output column: a never-null struct whose two children are
+    * a batch's decoded (main, indicator) vectors, shared by reference;
+    * the main vector already carries the struct's inner type. */
+  final class PairVector(dt: StructType, main: ColumnVector,
+      ind: ColumnVector) extends ColumnVector(dt) {
+    override def getChild(ordinal: Int): ColumnVector =
+      if (ordinal == 0) main else ind
+    override def hasNull: Boolean = false
+    override def numNulls: Int = 0
+    override def isNullAt(rowId: Int): Boolean = false
+    override def close(): Unit = { main.close(); ind.close() }
+    private def leaf = throw new UnsupportedOperationException(
+      "readstat: struct column has no scalar value")
+    override def getBoolean(rowId: Int): Boolean = leaf
+    override def getByte(rowId: Int): Byte = leaf
+    override def getShort(rowId: Int): Short = leaf
+    override def getInt(rowId: Int): Int = leaf
+    override def getLong(rowId: Int): Long = leaf
+    override def getFloat(rowId: Int): Float = leaf
+    override def getDouble(rowId: Int): Double = leaf
+    override def getArray(rowId: Int): ColumnarArray = leaf
+    override def getMap(rowId: Int): ColumnarMap = leaf
+    override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal = leaf
+    override def getUTF8String(rowId: Int): UTF8String = leaf
+    override def getBinary(rowId: Int): Array[Byte] = leaf
+  }
 
-  /** Wrap a module-row iterator so struct/merged output fields are
-    * combined from their separate (main, indicator) columns.
-    *
-    * @param required  final output schema (struct/merged shapes)
-    * @param sepNatural the module's full separate-column schema (natural types)
-    * @param prs       (main, indicator) pairs present in sepNatural
-    * @return (moduleRequired, wrap): the separate-column schema to request
-    *         from the module, and the row-combining wrapper
-    */
-  def combiner(required: StructType, sepNatural: StructType,
-      prs: Seq[(String, String)], mode: String)
-      : (StructType, Iterator[InternalRow] => Iterator[InternalRow]) = {
-    val byMain = prs.toMap
-    val natByName = sepNatural.fields.map(f => f.name -> f).toMap
-    val modFields = scala.collection.mutable.ArrayBuffer[StructField]()
-    def fieldIdx(f: StructField): Int = {
-      val i = modFields.indexWhere(_.name == f.name)
-      if (i >= 0) i else { modFields += f; modFields.length - 1 }
+  /** `merged` output column: the main value's string form for valid
+    * rows, the indicator for user-missing rows, null for system-missing.
+    * `mainType` is the main column's natural (decoded) type. */
+  def mergedVector(main: ColumnVector, mainType: DataType,
+      ind: ColumnVector, rows: Int): ColumnVector = {
+    val out = new OnHeapColumnVector(math.max(rows, 1), StringType)
+    var r = 0
+    while (r < rows) {
+      val s =
+        if (!main.isNullAt(r)) mergedString(valueAt(main, r, mainType), mainType)
+        else if (!ind.isNullAt(r)) ind.getUTF8String(r)
+        else null
+      if (s == null) out.putNull(r)
+      else { val b = s.getBytes; out.putByteArray(r, b, 0, b.length) }
+      r += 1
     }
-    val outPlan: Array[OutCol] = required.fields.map { f =>
-      byMain.get(f.name) match {
-        case Some(ind) if mode == "struct" || mode == "merged" =>
-          val mainNat = natByName(f.name)
-          val indNat = natByName(ind)
-          val mi = fieldIdx(mainNat); val ii = fieldIdx(indNat)
-          if (mode == "struct") {
-            // the struct's inner main type may be compress-narrowed or
-            // overridden — cast from the module's natural type to it
-            val inner = f.dataType.asInstanceOf[StructType].fields(0).dataType
-            AsStruct(mi, ii, inner)
-          } else AsMerged(mi, ii, mainNat.dataType)
-        case _ =>
-          Pass(fieldIdx(natByName.getOrElse(f.name, f)))
-      }
-    }
-    val moduleRequired = StructType(modFields.toSeq)
-    val wrap = (it: Iterator[InternalRow]) => it.map { row =>
-      val out = new GenericInternalRow(outPlan.length)
-      var i = 0
-      while (i < outPlan.length) {
-        outPlan(i) match {
-          case Pass(mi) =>
-            out.update(i, if (row.isNullAt(mi)) null
-              else Narrowing.castValue(row, mi, moduleRequired(mi).dataType,
-                required(i).dataType))
-          case AsStruct(mi, ii, inner) =>
-            val main = if (row.isNullAt(mi)) null
-              else Narrowing.castValue(row, mi, moduleRequired(mi).dataType, inner)
-            val ind = if (row.isNullAt(ii)) null else row.getUTF8String(ii)
-            out.update(i, new GenericInternalRow(Array[Any](main, ind)))
-          case AsMerged(mi, ii, mt) =>
-            val v: Any =
-              if (!row.isNullAt(mi)) mergedString(row.get(mi, mt), mt)
-              else if (!row.isNullAt(ii)) row.getUTF8String(ii)
-              else null
-            out.update(i, v)
-        }
-        i += 1
-      }
-      out: InternalRow
-    }
-    (moduleRequired, wrap)
+    out
+  }
+
+  private def valueAt(v: ColumnVector, r: Int, dt: DataType): Any = dt match {
+    case StringType => v.getUTF8String(r)
+    case BooleanType => v.getBoolean(r)
+    case ByteType => v.getByte(r)
+    case ShortType => v.getShort(r)
+    case IntegerType | DateType => v.getInt(r)
+    case FloatType => v.getFloat(r)
+    case DoubleType => v.getDouble(r)
+    case _ => v.getLong(r) // long, timestamps, time of day
   }
 
   /** String form of a valid value for merged mode (Polars-like cast). */

@@ -360,7 +360,7 @@ object FileMetadataRows {
         throw new java.io.IOException(
           s"xpt: non-padding bytes after the last whole row of $path — " +
             "file appears truncated mid-row")
-      mk("xpt", md.rowCount, md.columns.size, "ISO-8859-1",
+      mk("xpt", XptModule.dataRowCount(path, md), md.columns.size, "ISO-8859-1",
         md.fileLabel, md.created,
         jsonObj(Seq(
           "version" -> md.version,

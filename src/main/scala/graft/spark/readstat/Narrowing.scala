@@ -1,7 +1,6 @@
 package graft.spark.readstat
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,11 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `compress`: a driver-side probe read of the first N rows infers a
   * narrowed schema (f64 → Boolean/Int8/Int16/Int32 when all probed values
   * fit; Datetime → Date when all-midnight; numeric strings → Double), then
-  * every partition casts at decode. Mirrors the reference's probe
+  * every partition casts its decoded vectors. Mirrors the reference's probe
   * inference (pybindings.rs:374-405, 691-717; stata/compress.rs:82-202).
   *
   * `schemaOverrides`: DDL fragment ("a INT, b STRING") replacing the
-  * declared types of named columns, applied the same decode-time way
+  * declared types of named columns, applied the same way
   * (reference: __init__.py:536-539).
   */
 object Narrowing {
@@ -32,7 +31,7 @@ object Narrowing {
       case Some(n) => math.min(probeRows.toLong, n)
       case None => probeRows.toLong
     }
-    val probe = module.rows(RangePartition(path, 0, clamped), opts, base)
+    val probe = module.rows(RangePartition(path, 0, clamped), opts.decodeNatural, base)
     val n = base.length
     val isIntegral = Array.fill(n)(true)
     val isBool = Array.fill(n)(true)
@@ -113,32 +112,11 @@ object Narrowing {
     })
   }
 
-  /** Wrap a natural-type row iterator so fields come out in the target
-    * (narrowed/overridden) types. Field order must match. */
-  def castingIterator(it: Iterator[InternalRow], from: StructType,
-      to: StructType): Iterator[InternalRow] = {
-    val n = from.length
-    val needs = (0 until n).exists(i => from(i).dataType != to(i).dataType)
-    if (!needs) return it
-    it.map { row =>
-      val out = new GenericInternalRow(n)
-      var i = 0
-      while (i < n) {
-        if (row.isNullAt(i)) out.update(i, null)
-        else out.update(i, castValue(row, i, from(i).dataType, to(i).dataType))
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** Columnar analog of [[castingIterator]] (r13): batches decode with
-    * the format's NATURAL types, then only the columns whose target type
-    * differs are re-materialized through the same castValue semantics
-    * (strict downcasts throw, string→double parse failures null);
-    * same-typed columns pass through by reference, zero copy. Keeps
-    * compress / schemaOverrides scans columnar — previously the last
-    * row-path-only regimes. */
+  /** Batches decode with the format's NATURAL types, then only the
+    * columns whose target type differs (compress narrowing, schema
+    * overrides, `mergeSchema` widening) are re-materialized through
+    * [[castValue]] (strict downcasts throw, string→double parse failures
+    * null); same-typed columns pass through by reference, zero copy. */
   def castingBatchIterator(
       it: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch],
       from: StructType, to: StructType)

@@ -170,7 +170,10 @@ object Formats {
 
   /** Union-by-name over every file's effective schema (`mergeSchema`
     * option — the semantics of spark.read.parquet's mergeSchema, extended
-    * to heterogeneous stat formats: a .dta and a .sav can merge). Name
+    * to heterogeneous stat formats: a .dta and a .sav can merge). Names
+    * match under the session's `spark.sql.caseSensitive` (the .xpt and
+    * .por writers upper-case names, so a frame written to .dta and .xpt
+    * merges into one column), keeping the first spelling seen. Name
     * collisions with different types widen within the numeric tower
     * (integral→larger integral, anything fractional→double); any other
     * conflict is an error naming the column and files. Columns absent
@@ -183,26 +186,32 @@ object Formats {
       case (x, y) if x == y => x
       case (x, y) if integral.contains(x) && integral.contains(y) =>
         if (x.defaultSize >= y.defaultSize) x else y
-      case (x: NumericType, y: NumericType) => DoubleType
+      case (_: NumericType, _: NumericType) => DoubleType
       case _ => throw new IllegalArgumentException(
         s"readstat: mergeSchema cannot reconcile column '$name': $a vs $b")
     }
+    val caseSensitive =
+      org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis
+    def key(name: String): String =
+      if (caseSensitive) name else name.toLowerCase(java.util.Locale.ROOT)
     val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
     val presentIn = scala.collection.mutable.HashMap[String, Int]()
     val schemas = DriverPar.mapOrdered(paths)(p => effectiveSchema(p, opts))
     schemas.foreach { s =>
+      s.fieldNames.map(key).distinct.foreach { k =>
+        presentIn.updateWith(k)(c => Some(c.getOrElse(0) + 1))
+      }
       s.fields.foreach { f =>
-        presentIn.updateWith(f.name)(c => Some(c.getOrElse(0) + 1))
-        fields.updateWith(f.name) {
+        fields.updateWith(key(f.name)) {
           case None => Some(f)
           case Some(ex) => Some(ex.copy(
-            dataType = widen(ex.dataType, f.dataType, f.name),
+            dataType = widen(ex.dataType, f.dataType, ex.name),
             nullable = ex.nullable || f.nullable))
         }
       }
     }
-    StructType(fields.values.map(f =>
-      if (presentIn(f.name) < paths.length) f.copy(nullable = true) else f).toArray)
+    StructType(fields.map { case (k, f) =>
+      if (presentIn(k) < paths.length) f.copy(nullable = true) else f }.toArray)
   }
 
   /** Memoized [[FormatModule.exactRowCount]], keyed by (path, length,
@@ -723,48 +732,36 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
       RuntimeFilteredPartition(p, rt): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Spark requires every partition of a scan to agree on row-vs-columnar
-    // (BatchScanExec rejects mixed partitions), so the decision is made
-    // once per scan across ALL files: any file that can't serve the batch
-    // loaders — unsupported regime, or (merged scans) a missing/pre-
-    // widening required column that the row path must null-fill or cast —
-    // degrades the whole scan to rows.
-    val reshape = opts.compress || opts.schemaOverrides.trim.nonEmpty
-    val columnar = opts.columnarEnabled && paths.forall { p =>
-      val module = Formats.moduleFor(p)
-      if (reshape) {
-        // columnar narrowing (r13): decode batches with the NATURAL
-        // types (modules refuse the reshaping regimes themselves), cast
-        // vectors in the connector (Narrowing.castingBatchIterator) —
-        // compress / schemaOverrides scans were the last row-only
-        // regimes. Struct/merged informative-null fields and
-        // mergeSchema-missing columns fail the name check and keep the
-        // row path (they reshape the ROW, not just cell types).
-        val byName = module.schema(p, opts.decodeNatural)
-          .fields.map(f => f.name -> f).toMap
-        required.fields.forall(f => byName.contains(f.name)) && {
-          val naturalRequired = StructType(required.fields.map(f => byName(f.name)))
-          module.supportsColumnar(p, opts.decodeNatural, naturalRequired)
-        }
-      } else {
-        val mergeable = !opts.mergeSchema || {
-          val natural = module.schema(p, opts).fields.map(f => f.name -> f.dataType).toMap
-          required.fields.forall(f => natural.get(f.name).contains(f.dataType))
-        }
-        mergeable && module.supportsColumnar(p, opts, required)
-      }
-    }
-    new ReadstatPartitionReaderFactory(required, opts, columnar, pushed)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new ReadstatPartitionReaderFactory(required, opts, pushed,
+      org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
 }
 
+/** Columnar reader for every readstat partition, batch and streaming
+  * alike: each range partition decodes through [[BatchReshape]]. The
+  * session's case sensitivity is captured on the driver (it decides how
+  * `mergeSchema` columns resolve per file). */
 class ReadstatPartitionReaderFactory(required: StructType,
-    opts: ReadstatOptions, columnar: Boolean,
-    pushed: Array[Filter] = Array.empty) extends PartitionReaderFactory {
+    opts: ReadstatOptions, pushed: Array[Filter],
+    caseSensitive: Boolean) extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  /** Row view of [[createColumnarReader]] for callers that drive the
+    * factory row by row; Spark's scans always read the batches. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val batches = createColumnarReader(partition)
+    new PartitionReader[InternalRow] {
+      private var rows = java.util.Collections.emptyIterator[InternalRow]()
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext && batches.next()) rows = batches.get().rowIterator()
+        if (rows.hasNext) { current = rows.next(); true } else false
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = batches.close()
+    }
+  }
 
   /** Runtime (DPP) filters ride on re-planned partitions — peel them
     * off and union with the statically pushed set. Both sets are
@@ -804,10 +801,8 @@ class ReadstatPartitionReaderFactory(required: StructType,
       val inner: Iterator[T] =
         try mk() catch { case NonFatal(e) => warn(e); Iterator.empty }
       new Iterator[T] {
-        // sentinel staging, not Option: this wraps EVERY partition's hot
-        // row loop whenever mode=permissive, healthy files included — a
-        // per-row Some allocation would tax the common case to serve
-        // the rare failure
+        // one staged element: a failure inside hasNext ends the
+        // partition cleanly instead of surfacing from next()
         private var staged: T = _
         private var hasStaged = false
         private var done = false
@@ -831,24 +826,10 @@ class ReadstatPartitionReaderFactory(required: StructType,
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val reshape = opts.compress || opts.schemaOverrides.trim.nonEmpty
-    val pushed = effectiveFilters(partition)
+    val filters = effectiveFilters(partition)
     val it = rangeParts(partition).iterator.flatMap { part =>
-      salvaged(part, () => {
-        val module = Formats.moduleFor(part.path)
-        if (!reshape) module.columnarRows(part, opts, required, pushed)
-        else {
-          // columnar narrowing (r13): natural-typed batches + vector cast
-          // (pushed is empty here — canEvalFilter refuses the reshaping
-          // regimes, so every filter stays a pure Catalyst residual)
-          val byName = module.schema(part.path, opts.decodeNatural)
-            .fields.map(f => f.name -> f).toMap
-          val naturalRequired = StructType(required.fields.map(f => byName(f.name)))
-          Narrowing.castingBatchIterator(
-            module.columnarRows(part, opts.decodeNatural, naturalRequired, pushed),
-            naturalRequired, required)
-        }
-      })
+      salvaged(part, () =>
+        BatchReshape.batches(part, opts, required, filters, caseSensitive))
     }
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
@@ -857,90 +838,6 @@ class ReadstatPartitionReaderFactory(required: StructType,
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
       override def close(): Unit = if (current != null) current.close()
     }
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val eff = effectiveFilters(partition)
-    val it0 = rangeParts(partition).iterator.flatMap(p =>
-      salvaged(p, () => rowIterator(p, eff)))
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it0.hasNext) { current = it0.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-
-  private def rowIterator(part: RangePartition,
-      pushed: Array[Filter]): Iterator[InternalRow] = {
-    val module = Formats.moduleFor(part.path)
-    // decode with the format's natural types, then cast to the requested
-    // (compress-narrowed / overridden) types; struct/merged informative-
-    // null fields are combined from their separate module columns
-    val natural = module.schema(part.path, opts)
-    val it: Iterator[InternalRow] =
-      if (opts.informativeNulls && opts.informativeNullMode != "column") {
-        val base = module.schema(part.path, opts.copy(informativeNulls = false))
-        val prs = InformativeNulls.pairs(natural, base, opts.informativeNullSuffix)
-        val (moduleRequired, wrap) = InformativeNulls.combiner(
-          required, natural, prs, opts.informativeNullMode)
-        wrap(module.rows(part, opts, moduleRequired))
-      } else {
-        val naturalByName = natural.fields.map(f => f.name -> f).toMap
-        val absent = required.fields.filterNot(f => naturalByName.contains(f.name))
-        if (absent.isEmpty) {
-          val naturalRequired = StructType(required.fields.map(f =>
-            naturalByName(f.name)))
-          // pushed filters reach the decoder only in this plain flow:
-          // modules compile them against their decoded output values,
-          // which ARE the required values here (canEvalFilter refuses
-          // the type-reshaping regimes, so natural == required types)
-          Narrowing.castingIterator(
-            module.rows(part, opts, naturalRequired, pushed),
-            naturalRequired, required)
-        } else if (!opts.mergeSchema) {
-          throw new IllegalArgumentException(
-            s"readstat: ${part.path} has no column(s) ${absent.map(_.name).mkString(", ")}" +
-              " — reading files with differing schemas requires .option(\"mergeSchema\", \"true\")")
-        } else {
-          // merged scan over a file missing some columns: decode what the
-          // file has, null-fill the rest at the required positions. If the
-          // file holds NONE of the required columns, drive row cadence off
-          // its first natural column (cheapest way to get the exact row
-          // count in every partition regime) and emit all-null rows.
-          val present = required.fields.filter(f => naturalByName.contains(f.name))
-          if (present.isEmpty) {
-            val pacer = StructType(Array(natural.fields.head))
-            val width = required.fields.length
-            module.rows(part, opts, pacer).map { _ =>
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                new Array[Any](width))
-            }
-          } else {
-          val naturalPresent = StructType(present.map(f => naturalByName(f.name)))
-          val presentTarget = StructType(present)
-          val inner = Narrowing.castingIterator(
-            module.rows(part, opts, naturalPresent), naturalPresent, presentTarget)
-          val presentPos = present.map(_.name).zipWithIndex.toMap
-          val slots = required.fields.map(f => presentPos.get(f.name))
-          val types = presentTarget.fields.map(_.dataType)
-          inner.map { row =>
-            val out = new Array[Any](slots.length)
-            var i = 0
-            while (i < slots.length) {
-              out(i) = slots(i) match {
-                case Some(j) => if (row.isNullAt(j)) null else row.get(j, types(j))
-                case None => null
-              }
-              i += 1
-            }
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-          }
-          }
-        }
-      }
-    it
   }
 }
 

@@ -139,9 +139,8 @@ class ReadstatMicroBatchStream(dir: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // row path unconditionally: future files' regimes are unknown at
-    // stream start, and Spark requires uniform row-vs-columnar partitions
-    new ReadstatPartitionReaderFactory(required, opts, columnar = false)
+    new ReadstatPartitionReaderFactory(required, opts, Array.empty,
+      org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
 
   override def commit(end: Offset): Unit = end match {
     case FilesOffset(files) => committedFiles = files.toSet

@@ -3,8 +3,6 @@ package graft.spark.readstat
 import java.io.RandomAccessFile
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,7 +38,7 @@ object SasModule extends FormatModule {
     case KDatetime => TimestampNTZType
     case KTime =>
       // nanos-of-day either way: TIME(6)'s physical long IS the nanos
-      // the row decode emits, so only the declared type switches
+      // the decoder emits, so only the declared type switches
       if (opts.timeAsTimeType) org.apache.spark.sql.types.TimeType(6)
       else LongType
     case KNum => DoubleType
@@ -338,10 +336,6 @@ object SasModule extends FormatModule {
     }
   }
 
-  private final case class ColPlan(fieldIdx: Int, col: SasColumn, kind: Kind,
-      labels: DoubleLabelLut, charLabels: Map[String, String] = null,
-      indicator: Boolean = false, rowIndex: Boolean = false)
-
   /** Same rule as the other fixed-width modules: predicates evaluate on
     * decoded output values; compress narrowing / overrides refuse. */
   override def canEvalFilter(path: String, opts: ReadstatOptions,
@@ -351,248 +345,10 @@ object SasModule extends FormatModule {
     PushedFilters.isSupported(filter, types.get)
   }
 
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow] =
-    rows(part, opts, required, Array.empty)
-
-  /** Decode-skipping scan: filter cells decode first per row slot;
-    * failing rows skip the remaining per-cell decode. (Compressed rows
-    * still pay their RLE/RDC expansion — the filter applies to the
-    * expanded slot — but all non-filter cell decode is skipped.) */
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] = {
-    val md = metadata(part.path)
-    failIfTruncated(part.path, md, opts)
-    val byName = md.columns.map(c => c.name).zipWithIndex.toMap
-    val plans = required.fields.zipWithIndex.map { case (f, fi) =>
-      if (opts.rowIndexName.contains(f.name))
-        ColPlan(fi, null, KNum, null, rowIndex = true)
-      else {
-        val (base, ind) =
-          if (opts.informativeNulls && f.name.endsWith(opts.informativeNullSuffix) &&
-              byName.contains(f.name.stripSuffix(opts.informativeNullSuffix)) &&
-              !byName.contains(f.name))
-            (f.name.stripSuffix(opts.informativeNullSuffix), true)
-          else (f.name, false)
-        val vi = byName.getOrElse(base,
-          throw new IllegalArgumentException(s"no such column: ${f.name}"))
-        val c = md.columns(vi)
-        val labels =
-          if (!ind && opts.valueLabelsAsStrings)
-            catalogLabels(opts, c).map(new DoubleLabelLut(_)).orNull
-          else null
-        val chLabels =
-          if (!ind && opts.valueLabelsAsStrings) catalogCharLabels(opts, c).orNull else null
-        ColPlan(fi, c, kindFor(c), labels, chLabels, indicator = ind)
-      }
-    }.sortBy(p => if (p.col == null) Int.MaxValue else p.col.offset)
-    val rowIndexBase: Long = part.rowsBefore.getOrElse(
-      if (opts.rowIndexName.isDefined && md.compression == 0)
-        pageRowOffsets(part.path)(part.startRow.toInt)
-      else 0L)
-    val cs = md.charset
-    val little = md.little
-    val rowLen = md.rowLength
-
-    val raf = new RandomAccessFile(part.path, "r")
-    val startPage = part.startRow.toInt
-    val endPage = (part.startRow + part.numRows).toInt
-    raf.seek(md.headerLength.toLong + startPage.toLong * md.pageLength)
-    val page = new Array[Byte](md.pageLength)
-    // global row cap: phantom trailing row subheaders only exist at the
-    // END of the file, so rowCount - rowsBefore caps this partition
-    // exactly; without a prefix the cap is only enforceable for a
-    // partition that sees every page
-    val capRows: Long = part.rowsBefore match {
-      case Some(before) => math.max(0L, md.rowCount - before)
-      case None =>
-        if (startPage == 0 && endPage >= md.pageCount) md.rowCount else Long.MaxValue
-    }
-
-    new Iterator[InternalRow] {
-      private var pageIdx = startPage
-      private var emitted = 0L
-      private var closed = false
-      // OFFSET pushdown: leading rows to drop (slots advance without
-      // decode or decompression — positional, so the skip is free)
-      private var toSkip = part.skipRows
-      // per-page row queue
-      private var rowsInPage: Seq[(Int, Int, Boolean)] = Nil // (offset, len, compressed)
-      private var rowPos = 0
-
-      private def close(): Unit = if (!closed) { closed = true; raf.close() }
-
-      @annotation.tailrec
-      private def advance(): Boolean = {
-        if (emitted >= capRows) { close(); return false }
-        if (toSkip > 0 && rowPos < rowsInPage.length) {
-          val take = math.min(toSkip, (rowsInPage.length - rowPos).toLong).toInt
-          rowPos += take; emitted += take; toSkip -= take
-          // skipped rows count as consumed (capRows caps consumption);
-          // if the skip ate the page, fall through to load the next
-        }
-        if (rowPos < rowsInPage.length) return true
-        if (pageIdx >= endPage) { close(); return false }
-        try raf.readFully(page)
-        catch {
-          case e: java.io.EOFException =>
-            // a planned page is physically missing — the file is
-            // truncated. Salvage keeps the whole-page prefix already
-            // emitted; every other mode must fail loudly (a silent
-            // short read is a wrong answer)
-            close()
-            if (opts.salvage) return false
-            throw new java.io.EOFException(
-              s"sas7bdat truncated: page $pageIdx of ${md.pageCount} " +
-                s"missing in ${part.path} (${e.getMessage})")
-        }
-        pageIdx += 1
-        rowsInPage = pageRowSlots(page, md)
-        rowPos = 0
-        advance()
-      }
-
-      // pushed-predicate compilation: filter fields decode first, the
-      // rest only for passing rows (see PushedFilters)
-      private val slotByName =
-        required.fields.zipWithIndex.map { case (f, i) => f.name -> i }.toMap
-      private val typeByName =
-        required.fields.map(f => f.name -> f.dataType).toMap
-      private val pred: PushedFilters.Pred =
-        if (pushed.isEmpty) null
-        else PushedFilters.compile(pushed.toSeq, slotByName.get, typeByName.get).orNull
-      private val predFields: Set[Int] =
-        if (pred == null) Set.empty
-        else pushed.flatMap(_.references).flatMap(slotByName.get).toSet
-      private val predPlans = plans.filter(p => predFields.contains(p.fieldIdx))
-      private val restPlans =
-        if (pred == null) plans else plans.filterNot(p => predFields.contains(p.fieldIdx))
-      private val getter: Int => Any = slot => row.values(slot)
-      private var rowReady = false
-
-      override def hasNext: Boolean = {
-        if (rowReady) return true
-        while (advance()) {
-          val (off, len, needsDecomp) = rowsInPage(rowPos)
-          val rowIdx = rowIndexBase + emitted
-          rowPos += 1; emitted += 1
-          val (buf, base) =
-            if (!needsDecomp) (page, off)
-            else {
-              val in = java.util.Arrays.copyOfRange(page, off, off + len)
-              val d = if (md.compression == 1) Rle.decompress(in, rowLen)
-                      else Rdc.decompress(in, rowLen)
-              (d, 0)
-            }
-          var pass = true
-          if (pred != null) {
-            var p = 0
-            while (p < predPlans.length) {
-              val pl = predPlans(p)
-              row.update(pl.fieldIdx,
-                if (pl.rowIndex) rowIdx else decodeCell(pl, buf, base))
-              p += 1
-            }
-            pass = pred(getter)
-          }
-          if (pass) {
-            var p = 0
-            while (p < restPlans.length) {
-              val pl = restPlans(p)
-              row.update(pl.fieldIdx,
-                if (pl.rowIndex) rowIdx else decodeCell(pl, buf, base))
-              p += 1
-            }
-            rowReady = true
-            return true
-          }
-          // definite filter miss: skip the remaining cells of this row
-        }
-        false
-      }
-
-      override def next(): InternalRow = {
-        if (!rowReady && !hasNext) throw new NoSuchElementException
-        rowReady = false
-        row
-      }
-      // reused mutable row: the scan's unsafe projection copies each row
-      private val row = new GenericInternalRow(plans.length)
-
-      /** Delegates to the module-level rule (shared with the columnar
-        * indicator decode). */
-      private def missingTagOffset(b: Array[Byte], off: Int, len: Int): Int =
-        SasModule.missingTagIn(b, off, len, md.little)
-
-      private def decodeCell(pl: ColPlan, b: Array[Byte], base: Int): Any = {
-        val c = pl.col
-        val off = base + c.offset
-        if (pl.indicator) {
-          if (c.isChar) return null
-          val k = missingTagOffset(b, off, c.length)
-          return if (k >= 1 && k <= 26)
-            UTF8String.fromString("." + ('A' + k - 1).toChar)
-          else if (k == 27) UTF8String.fromString("._")
-          else null
-        }
-        if (pl.kind == KChar) {
-          var end = off + c.length
-          while (end > off && (b(end - 1) == ' ' || b(end - 1) == 0)) end -= 1
-          var stop = off
-          while (stop < end && b(stop) != 0) stop += 1
-          if (stop == off) {
-            if (opts.missingStringAsNull) null else UTF8String.fromString("")
-          } else {
-            val s = new String(b, off, stop - off, cs)
-            // char-format catalog labels: matched codes map, unmatched
-            // values pass through (reference replace_strict default)
-            UTF8String.fromString(
-              if (pl.charLabels != null) pl.charLabels.getOrElse(s, s) else s)
-          }
-        } else {
-          val v = SasCore.incompleteDouble(b, off, c.length, little)
-          if (v.isNaN || v.isInfinite) null
-          else if (pl.labels != null) {
-            val label = pl.labels.get(v)
-            if (label != null) label
-            else UTF8String.fromString(NumRender.code(v))
-          }
-          else pl.kind match {
-            case KDate => SasCore.toDateDays(v)
-            case KDatetime => SasCore.toDatetimeMicros(v)
-            case KTime => SasCore.toTimeNanos(v)
-            case _ => v
-          }
-        }
-      }
-    }
-  }
-
-  // ---- vectorized decode path (uncompressed pages only) ----
-
-  /** Columnar decode covers the plain configurations plus catalog label
-    * decode (r12, completing the matrix with dta/sav/por) plus
-    * column-mode informative-null indicators (struct/merged modes fail
-    * the name/type check below); narrowing and overrides -> row path. */
-  override def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = {
-    if (opts.compress ||
-      opts.schemaOverrides.nonEmpty) return false
-    val nat = schema(path, opts)
-    val byName = nat.fields.map(f => f.name -> f.dataType).toMap
-    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
-  }
-
-  override def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required, Array.empty)
-
   /** One ColumnarBatch per data-bearing page: per-column tight loops over
     * the page's fixed-width row slots (rows never span pages). RLE/RDC
     * pages decompress their row subheaders into one contiguous page-local
-    * buffer first, then run the same column loops over it — compressed
-    * files get the vectorized path too, not the row fallback.
+    * buffer first, then run the same column loops over it.
     *
     * Pushed filters (r12): rows are addressed through a per-page offset
     * array, so filtering needs no byte compaction at all — the predicate
@@ -640,7 +396,7 @@ object SasModule extends FormatModule {
     val rowLen = md.rowLength
     val startPage = part.startRow.toInt
     val endPage = (part.startRow + part.numRows).toInt
-    // same cap math as the row path: phantom trailing row subheaders only
+    // phantom trailing row subheaders only
     // exist at the end of the file
     val capRows: Long = part.rowsBefore match {
       case Some(before) => math.max(0L, md.rowCount - before)
@@ -916,7 +672,7 @@ object SasModule extends FormatModule {
           return
         }
         if (indicator) {
-          // SAS tagged missing (row-path missingTagOffset rule): char
+          // SAS tagged missing (missingTagOffset rule): char
           // columns never tag; k 1..26 -> ".A"-".Z", 27 -> "._"
           var r = 0
           while (r < n) {

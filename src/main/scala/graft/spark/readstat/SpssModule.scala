@@ -4,8 +4,6 @@ import java.io.{BufferedInputStream, FileInputStream, RandomAccessFile}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.zip.InflaterInputStream
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -203,11 +201,6 @@ object SpssModule extends FormatModule {
     Some(first +: rest)
   }
 
-  private final case class ColPlan(
-      fieldIdx: Int, varIdx: Int, byteOff: Int, v: SpssVar,
-      out: DataType, labels: Boolean, indicator: Boolean,
-      numLut: DoubleLabelLut = null) // see [[DoubleLabelLut]]
-
   /** Same rule as StataModule: predicates evaluate on decoded output
     * values, so anything that lands numeric or string qualifies;
     * compress narrowing / overrides reshape types post-decode → refuse. */
@@ -216,169 +209,6 @@ object SpssModule extends FormatModule {
     if (opts.compress || opts.schemaOverrides.nonEmpty) return false
     val types = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
     PushedFilters.isSupported(filter, types.get)
-  }
-
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow] =
-    rows(part, opts, required, Array.empty)
-
-  /** Decode-skipping scan: filter cells decode first off the row
-    * buffer; failing rows skip the remaining per-cell decode. (For the
-    * bytecode/zsav sources the 8-byte slots were already expanded by
-    * the command stream — the skip saves string materialization,
-    * missing-rule checks and boxing, not the expansion itself; for
-    * uncompressed files it saves everything past the filter columns.) */
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] = {
-    val md = metadata(part.path)
-    val recordLen = md.recordLen
-    val byName = md.vars.zipWithIndex.map { case (v, i) => v.name -> i }.toMap
-    val plans = required.fields.zipWithIndex.map { case (f, fi) =>
-      if (opts.rowIndexName.contains(f.name)) ColPlan(fi, -1, 0, null, LongType, labels = false, indicator = false)
-      else {
-        val (base, ind) =
-          if (opts.informativeNulls && f.name.endsWith(opts.informativeNullSuffix) &&
-              byName.contains(f.name.stripSuffix(opts.informativeNullSuffix)) &&
-              !byName.contains(f.name))
-            (f.name.stripSuffix(opts.informativeNullSuffix), true)
-          else (f.name, false)
-        val vi = byName.getOrElse(base,
-          throw new IllegalArgumentException(s"no such column: ${f.name}"))
-        val v = md.vars(vi)
-        val lab = !ind && opts.valueLabelsAsStrings &&
-          (v.numLabels.nonEmpty || v.strLabels.nonEmpty)
-        ColPlan(fi, vi, v.offsetUnits * 8, v,
-          if (ind) StringType else sparkTypeOf(v, opts),
-          labels = lab,
-          indicator = ind,
-          numLut = if (lab && v.numLabels.nonEmpty)
-            new DoubleLabelLut(v.numLabels) else null)
-      }
-    }
-
-    val rowSource: RowSource = md.compression match {
-      case 0 => new SeekRowSource(part, md)
-      case 1 => new BytecodeRowSource(part, md)
-      case 2 => new ZsavRowSource(part, md, opts.salvage)
-      case other => throw new IllegalArgumentException(s"sav compression $other")
-    }
-
-    // compile the pushed predicate against field slots; predicate
-    // fields decode first, the rest only for passing rows
-    val slotByName = required.fields.zipWithIndex.map { case (f, i) => f.name -> i }.toMap
-    val typeByName = required.fields.map(f => f.name -> f.dataType).toMap
-    val pred: PushedFilters.Pred =
-      if (pushed.isEmpty) null
-      else PushedFilters.compile(pushed.toSeq, slotByName.get, typeByName.get).orNull
-    val predFields: Set[Int] =
-      if (pred == null) Set.empty
-      else pushed.flatMap(_.references).flatMap(slotByName.get).toSet
-    val predPlans = plans.filter(p => predFields.contains(p.fieldIdx))
-    val restPlans =
-      if (pred == null) plans else plans.filterNot(p => predFields.contains(p.fieldIdx))
-
-    new Iterator[InternalRow] {
-      private var globalRow = part.startRow
-      // reused mutable row: the scan's unsafe projection copies each row
-      private val row = new GenericInternalRow(plans.length)
-      private val getter: Int => Any = slot => row.values(slot)
-      private var rowReady = false
-
-      // a mid-decode exception abandons this iterator (salvage wrapper
-      // or task failure) — close the source's handle before rethrowing
-      def nextRowClosing(): Array[Byte] =
-        try rowSource.nextRow()
-        catch { case e: Throwable => rowSource.close(); throw e }
-
-      override def hasNext: Boolean = {
-        if (rowReady) return true
-        var b = nextRowClosing()
-        while (b != null) {
-          var pass = true
-          if (pred != null) {
-            var p = 0
-            while (p < predPlans.length) {
-              row.update(predPlans(p).fieldIdx, decodeCell(predPlans(p), b, globalRow))
-              p += 1
-            }
-            pass = pred(getter)
-          }
-          if (pass) {
-            var p = 0
-            while (p < restPlans.length) {
-              row.update(restPlans(p).fieldIdx, decodeCell(restPlans(p), b, globalRow))
-              p += 1
-            }
-            globalRow += 1
-            rowReady = true
-            return true
-          }
-          // definite filter miss: skip the rest of this row's decode
-          globalRow += 1
-          b = nextRowClosing()
-        }
-        false
-      }
-
-      override def next(): InternalRow = {
-        if (!rowReady && !hasNext) throw new NoSuchElementException
-        rowReady = false
-        row
-      }
-
-      private def decodeCell(pl: ColPlan, b: Array[Byte], rowIdx: Long): Any = {
-        if (pl.varIdx == -1) return rowIdx
-        val v = pl.v
-        if (v.isString) {
-          val storage = v.widthUnits * 8
-          val raw =
-            if (v.stringLen > 255)
-              SpssCore.reconstructVeryLong(b, pl.byteOff, storage, v.stringLen)
-            else java.util.Arrays.copyOfRange(b, pl.byteOff,
-              pl.byteOff + math.min(v.stringLen, storage))
-          val s = SpssCore.trimSav(new String(raw, md.charset))
-          if (pl.indicator)
-            return if (v.missingStrings.contains(s)) {
-              val lbl = if (opts.informativeNullUseValueLabels)
-                v.strLabels.get(s) else None
-              UTF8String.fromString(lbl.getOrElse(s))
-            } else null
-          val isMissing = (opts.missingStringAsNull && s.isEmpty) ||
-            v.missingStrings.contains(s)
-          if (isMissing) null
-          else if (pl.labels) UTF8String.fromString(v.strLabels.getOrElse(s, s))
-          else UTF8String.fromString(s)
-        } else {
-          val bits = Bin.i64(b, pl.byteOff, md.little)
-          val d = java.lang.Double.longBitsToDouble(bits)
-          val sysMissing = bits == MissingBits || bits == LowestBits ||
-            bits == HighestBits || d.isNaN
-          if (pl.indicator) {
-            if (sysMissing) return null
-            return userMissingLabel(v, d, bits, opts.informativeNullUseValueLabels)
-              .map(UTF8String.fromString).orNull
-          }
-          if (sysMissing || isUserMissing(v, d, bits)) return null
-          if (pl.labels) {
-            if (pl.numLut != null) {
-              val label = pl.numLut.get(d)
-              if (label != null) return label
-            }
-            return UTF8String.fromString(NumRender.code(d))
-          }
-          pl.out match {
-            case DateType => ((d.toLong - SecShift) / 86400L).toInt
-            case TimestampNTZType =>
-              math.round((d - SecShift) * 1000.0) * 1000L // → micros
-            case LongType => math.round(d * 1e9) // time-of-day seconds → nanos
-            case _: org.apache.spark.sql.types.TimeType =>
-              math.round(d * 1e9) // TIME(6) internal = nanos of day
-            case _ => d
-          }
-        }
-      }
-    }
   }
 
   private def isUserMissing(v: SpssVar, d: Double, bits: Long): Boolean = {
@@ -393,46 +223,10 @@ object SpssModule extends FormatModule {
     } else v.missingDoubles.contains(d)
   }
 
-  /** Reference semantics (data.rs missing_numeric_indicator): discrete user
-    * missing → label or value string; range missing → label or "MISSING". */
-  private def userMissingLabel(v: SpssVar, d: Double, bits: Long,
-      useValueLabels: Boolean): Option[String] = {
-    if (!isUserMissing(v, d, bits)) None
-    else {
-      // reference use_value_labels (default true): a defined value label
-      // for the missing code beats the code form (lib.rs:121-129)
-      val label = if (useValueLabels) v.numLabels.get(d) else None
-      if (label.isDefined) label
-      else if (v.missingRange && !(v.missingDoubles.length >= 3 && d == v.missingDoubles(2)))
-        Some("MISSING")
-      else Some(NumRender.code(d))
-    }
-  }
-
-  // ---- vectorized decode path ----
-
-  /** Columnar decode covers the plain configurations plus label decode
-    * plus column-mode informative-null indicators (r12 — struct/merged
-    * modes reshape the schema and fail the name/type check below);
-    * narrowing and overrides → row path. */
-  override def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = {
-    if (opts.compress ||
-      opts.schemaOverrides.nonEmpty) return false
-    val nat = schema(path, opts)
-    val byName = nat.fields.map(f => f.name -> f.dataType).toMap
-    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
-  }
-
-  override def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required, Array.empty)
-
   /** Per-column tight loops over fixed-width record chunks. Uncompressed
     * files chunk-read straight off an O(1) seek; bytecode/zsav partitions
     * decompress through their checkpointed RowSource into the same
-    * recordLen-strided chunk buffer, so compressed files get typed column
-    * vectors instead of the per-cell row fallback.
+    * recordLen-strided chunk buffer.
     *
     * Pushed filters (r12): filter cells evaluate over the raw chunk
     * first, passing rows compact into a contiguous buffer, and the
@@ -462,8 +256,8 @@ object SpssModule extends FormatModule {
             else (f.name, false)
           val v = md.vars(byName(base))
           // indicator numeric LUT: a value label for the missing code
-          // beats the code/"MISSING" form when useValueLabels (row
-          // path's userMissingLabel rule)
+          // beats the code/"MISSING" form when useValueLabels
+          // (reference data.rs missing_numeric_indicator)
           val numLut =
             if (!ind && opts.valueLabelsAsStrings && !v.isString && v.numLabels.nonEmpty)
               new DoubleByteLut(v.numLabels)
@@ -514,7 +308,7 @@ object SpssModule extends FormatModule {
                 if (sysMissing || isUserMissing(v, d, bits)) null
                 else java.lang.Double.valueOf(d)
               }
-              // temporal wrap: the row path's pl.out transform exactly
+              // temporal wrap to the declared output type
               sparkTypeOf(v, opts) match {
                 case DateType => (b, base) => {
                   val x = numDec(b, base)
@@ -617,7 +411,7 @@ object SpssModule extends FormatModule {
 
     val chunkRows = math.max(1, (4 << 20) / math.max(1, recordLen))
     // uncompressed: bulk reads off a seek; compressed: checkpointed
-    // sequential decompression (exactly the row path's source)
+    // sequential decompression through a RowSource
     val raf = if (md.compression == 0) {
       val r = new RandomAccessFile(part.path, "r")
       r.seek(md.dataOffset + part.startRow * recordLen)
@@ -758,8 +552,7 @@ object SpssModule extends FormatModule {
       private val missingBytes =
         "MISSING".getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-      /** Informative-null indicator → mostly-null string vector (the
-        * row path's decodeCell indicator rules, vectorized). */
+      /** Informative-null indicator → mostly-null string vector. */
       private def decodeIndicatorCol(v: SpssVar, numLut: DoubleByteLut,
           buf: Array[Byte], n: Int, vec: OnHeapColumnVector): Unit = {
         val off = v.offsetUnits * 8
@@ -831,8 +624,8 @@ object SpssModule extends FormatModule {
             if ((opts.missingStringAsNull && s.isEmpty) || v.missingStrings.contains(s))
               vec.putNull(r)
             else {
-              // string value labels decode in place (row-path rule:
-              // label beats the stored value, unlabeled values pass)
+              // string value labels decode in place: a label beats the
+              // stored value, unlabeled values pass
               val out = if (strLab) v.strLabels.getOrElse(s, s) else s
               val b = out.getBytes(java.nio.charset.StandardCharsets.UTF_8)
               vec.putByteArray(r, b, 0, b.length)
@@ -1008,46 +801,15 @@ object SpssModule extends FormatModule {
 
   // ---- row sources ----
   private trait RowSource {
-    def nextRow(): Array[Byte]
+    /** Decode the next row into dst at off; false once the range is
+      * exhausted. */
+    def nextRowInto(dst: Array[Byte], off: Int): Boolean
     /** Release the source's file handle / inflater early. Sources close
       * themselves on normal exhaustion; this exists for the error path —
       * a mid-decode exception abandons the iterator (salvage wrapper or
       * task failure), and an explicit close beats waiting for the JDK
       * cleaners. Must be idempotent. */
     def close(): Unit = ()
-    /** Decode the next row directly into dst at off (no per-row
-      * allocation); default delegates to nextRow for sources where the
-      * copy is already the cheap part. */
-    def nextRowInto(dst: Array[Byte], off: Int): Boolean = {
-      val r = nextRow()
-      if (r == null) false
-      else { System.arraycopy(r, 0, dst, off, r.length); true }
-    }
-  }
-
-  /** Uncompressed: O(1) seek + bulk chunk reads. */
-  private final class SeekRowSource(part: RangePartition, md: SpssMeta)
-      extends RowSource {
-    private val recordLen = md.recordLen
-    private val raf = new RandomAccessFile(part.path, "r")
-    raf.seek(md.dataOffset + part.startRow * recordLen)
-    private var remaining = part.numRows
-    private val chunkRows = math.max(1, (4 << 20) / math.max(1, recordLen))
-    private var buf: Array[Byte] = _
-    private var bufRows, bufPos = 0
-    override def nextRow(): Array[Byte] = {
-      if (remaining <= 0) { raf.close(); return null }
-      if (buf == null || bufPos >= bufRows) {
-        val n = math.min(chunkRows.toLong, remaining).toInt
-        buf = new Array[Byte](n * recordLen)
-        raf.readFully(buf)
-        bufRows = n; bufPos = 0
-      }
-      val out = java.util.Arrays.copyOfRange(buf, bufPos * recordLen, (bufPos + 1) * recordLen)
-      bufPos += 1; remaining -= 1
-      out
-    }
-    override def close(): Unit = raf.close()
   }
 
   /** Bytecode (compression=1): sequential command-stream decode
@@ -1068,7 +830,6 @@ object SpssModule extends FormatModule {
       else __toSkip -= 1
     }
     private val missBytes = {
-      val b = new Array[Byte](8)
       val o = new java.io.ByteArrayOutputStream()
       if (md.little) Bin.putU64(o, MissingBits) else {
         val v = MissingBits
@@ -1087,11 +848,6 @@ object SpssModule extends FormatModule {
     // skipRows decodes-and-drops the mid-interval remainder up to
     // startRow (offset pushdown). Without one, skip from data start.
     private var toSkip = if (part.sav.isDefined) part.skipRows else part.startRow
-
-    override def nextRow(): Array[Byte] = {
-      val out = new Array[Byte](recordLen)
-      if (nextRowInto(out, 0)) out else null
-    }
 
     override def nextRowInto(dst: Array[Byte], off: Int): Boolean = {
       while (toSkip > 0) { if (!readRowInto(dst, off)) return false; toSkip -= 1 }
@@ -1275,11 +1031,6 @@ object SpssModule extends FormatModule {
         skipInBlock = 0
         res
       } finally inf.end()
-    }
-
-    override def nextRow(): Array[Byte] = {
-      val out = new Array[Byte](recordLen)
-      if (nextRowInto(out, 0)) out else null
     }
 
     override def nextRowInto(dst: Array[Byte], off: Int): Boolean = {

@@ -3,8 +3,6 @@ package graft.spark.readstat
 import java.io.RandomAccessFile
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -80,11 +78,6 @@ object XptModule extends FormatModule {
     StructType(fields.result())
   }
 
-  /** Metadata count corrected for record padding: the data section is
-    * space-padded to an 80-byte boundary, so file-size arithmetic can
-    * overcount by the phantom all-space rows overlapping the final
-    * 80-byte record. Replays the decoder's exact cut rule over just that
-    * tail zone — one O(80+rowLen)-byte read, no data decode. */
   /** Mid-row truncation (recorded by the core parse — the header still
     * reads) fails LOUDLY everywhere except mode=permissive, which
     * salvages the whole-row prefix the floored rowCount already
@@ -98,13 +91,35 @@ object XptModule extends FormatModule {
           "appears truncated mid-row (mode=permissive salvages the " +
           "whole-row prefix)")
 
-  override def exactRowCount(path: String, opts: ReadstatOptions): Option[Long] = {
-    val md = metadata(path)
-    if (md.truncatedTail) return None // scan surfaces the loud error
+  /** Index of the first all-space padding row among the `rows` rows of
+    * `buf` (file rows from `firstRow` on), or -1. The data section is
+    * space-padded to an 80-byte boundary, so only a row that ends inside
+    * the file's final 80-byte record can be padding. The one cut rule of
+    * the decoder, [[exactRowCount]] and the file-metadata row count. */
+  private[readstat] def paddingCut(md: XptMeta, fileLen: Long,
+      buf: Array[Byte], firstRow: Long, rows: Int): Int = {
+    val rowLen = md.rowLength
+    var r = 0
+    while (r < rows) {
+      if (md.dataOffset + (firstRow + r + 1) * rowLen > fileLen - 80) {
+        val base = r * rowLen
+        var i = base
+        while (i < base + rowLen && buf(i) == ' ') i += 1
+        if (i == base + rowLen) return r
+      }
+      r += 1
+    }
+    -1
+  }
+
+  /** Data rows of the file: the header's file-size count, which also
+    * counts the phantom all-space rows overlapping the final 80-byte
+    * record, corrected by [[paddingCut]] over just that tail zone — one
+    * O(80+rowLen)-byte read, no data decode. */
+  private[readstat] def dataRowCount(path: String, md: XptMeta): Long = {
     val rowLen = math.max(1, md.rowLength)
     val n = md.rowCount
-    if (n == 0) return Some(0L)
-    val fileLen = new java.io.File(path).length()
+    if (n == 0) return 0L
     val start = math.max(0L, n - (80L / rowLen + 2))
     val raf = new RandomAccessFile(path, "r")
     try {
@@ -112,24 +127,15 @@ object XptModule extends FormatModule {
       val m = (n - start).toInt
       val buf = new Array[Byte](m * rowLen)
       raf.readFully(buf)
-      var r = 0
-      var cut = -1
-      while (cut < 0 && r < m) {
-        val endAbs = md.dataOffset + (start + r + 1) * rowLen
-        if (endAbs > fileLen - 80) {
-          val base = r * rowLen
-          var allSpace = true
-          var i = base
-          while (allSpace && i < base + rowLen) {
-            if (buf(i) != ' ') allSpace = false
-            i += 1
-          }
-          if (allSpace) cut = r
-        }
-        r += 1
-      }
-      Some(if (cut >= 0) start + cut else n)
+      val cut = paddingCut(md, new java.io.File(path).length(), buf, start, m)
+      if (cut >= 0) start + cut else n
     } finally raf.close()
+  }
+
+  override def exactRowCount(path: String, opts: ReadstatOptions): Option[Long] = {
+    val md = metadata(path)
+    if (md.truncatedTail) None // scan surfaces the loud error
+    else Some(dataRowCount(path, md))
   }
 
   override def planPartitions(path: String, opts: ReadstatOptions,
@@ -161,215 +167,6 @@ object XptModule extends FormatModule {
     val types = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
     PushedFilters.isSupported(filter, types.get)
   }
-
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow] =
-    rows(part, opts, required, Array.empty)
-
-  /** Decode-skipping scan: filter cells decode first; failing rows skip
-    * the remaining per-cell decode (fixed-width layout — the next row
-    * is a stride away). */
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] = {
-    val md = metadata(part.path)
-    failIfTruncated(part.path, md, opts)
-    val byName = md.columns.map(_.name).zipWithIndex.toMap
-    // (fieldIdx, col-or-null(=rowIndex), kind, indicator, labels, charLabels)
-    val plans = required.fields.zipWithIndex.map { case (f, fi) =>
-      if (opts.rowIndexName.contains(f.name))
-        (fi, null.asInstanceOf[graft.core.xpt.XptCore.XptColumn], SasCore.KNum,
-          false, null: DoubleLabelLut, null: Map[String, String])
-      else {
-        val (base, ind) =
-          if (opts.informativeNulls && f.name.endsWith(opts.informativeNullSuffix) &&
-              byName.contains(f.name.stripSuffix(opts.informativeNullSuffix)) &&
-              !byName.contains(f.name))
-            (f.name.stripSuffix(opts.informativeNullSuffix), true)
-          else (f.name, false)
-        val c = md.columns(byName.getOrElse(base,
-          throw new IllegalArgumentException(s"no such column: ${f.name}")))
-        val labels =
-          if (!ind && opts.valueLabelsAsStrings)
-            catalogLabels(opts, c).map(new DoubleLabelLut(_)).orNull
-          else null
-        val chLabels =
-          if (!ind && opts.valueLabelsAsStrings) catalogCharLabels(opts, c).orNull
-          else null
-        (fi, c, kindOf(c), ind, labels, chLabels)
-      }
-    }
-    val rowLen = md.rowLength
-    val fileLen = new java.io.File(part.path).length()
-    val raf = new RandomAccessFile(part.path, "r")
-    raf.seek(md.dataOffset + part.startRow * rowLen)
-    val chunkRows = math.max(1, (4 << 20) / math.max(1, rowLen))
-
-    // compile the pushed predicate against field slots; predicate
-    // fields decode first, the rest only for passing rows
-    val slotByName = required.fields.zipWithIndex.map { case (f, i) => f.name -> i }.toMap
-    val typeByName = required.fields.map(f => f.name -> f.dataType).toMap
-    val pred: PushedFilters.Pred =
-      if (pushed.isEmpty) null
-      else PushedFilters.compile(pushed.toSeq, slotByName.get, typeByName.get).orNull
-    val predFields: Set[Int] =
-      if (pred == null) Set.empty
-      else pushed.flatMap(_.references).flatMap(slotByName.get).toSet
-    val predPlans = plans.filter(p => predFields.contains(p._1))
-    val restPlans = if (pred == null) plans else plans.filterNot(p => predFields.contains(p._1))
-
-    new Iterator[InternalRow] {
-      private var remaining = part.numRows
-      private var buf: Array[Byte] = _
-      private var bufRows, bufPos = 0
-      private var done = false
-
-      /** A raw (possibly filter-failing) row is positioned at bufPos. */
-      private def rawRowAvailable(): Boolean = {
-        if (done) return false
-        if (remaining <= 0) { raf.close(); done = true; return false }
-        if (buf == null || bufPos >= bufRows) {
-          val n = math.min(chunkRows.toLong, remaining).toInt
-          buf = new Array[Byte](n * rowLen)
-          try raf.readFully(buf)
-          catch { case _: java.io.EOFException => raf.close(); done = true; return false }
-          bufRows = n; bufPos = 0
-        }
-        // Trailing blank (all-space) rows are record padding, not data —
-        // but ONLY within the file's final 80-byte record: the data
-        // section is space-padded to an 80-byte boundary, so every
-        // phantom row overlaps that last record. A legitimate all-blank
-        // row earlier in the file is data and must not end the scan.
-        val rowIdx = part.startRow + (part.numRows - remaining)
-        val rowEndAbs = md.dataOffset + (rowIdx + 1) * rowLen
-        if (rowEndAbs > fileLen - 80) {
-          val base = bufPos * rowLen
-          var allSpace = true
-          var i = base
-          while (allSpace && i < base + rowLen) { if (buf(i) != ' ') allSpace = false; i += 1 }
-          if (allSpace) { raf.close(); done = true; return false }
-        }
-        true
-      }
-
-      private var localIdx = 0L
-      // reused mutable row: the scan's unsafe projection copies each row
-      private val row = new GenericInternalRow(plans.length)
-      private val getter: Int => Any = slot => row.values(slot)
-      private var rowReady = false
-
-      override def hasNext: Boolean = {
-        if (rowReady) return true
-        while (rawRowAvailable()) {
-          val base = bufPos * rowLen
-          val rowIdx = part.startRow + localIdx
-          var pass = true
-          if (pred != null) {
-            var p = 0
-            while (p < predPlans.length) {
-              val pl = predPlans(p)
-              row.update(pl._1, decodePlan(pl, base, rowIdx))
-              p += 1
-            }
-            pass = pred(getter)
-          }
-          if (pass) {
-            var p = 0
-            while (p < restPlans.length) {
-              val pl = restPlans(p)
-              row.update(pl._1, decodePlan(pl, base, rowIdx))
-              p += 1
-            }
-            rowReady = true
-            return true
-          }
-          // definite filter miss: skip without decoding the rest
-          bufPos += 1; remaining -= 1; localIdx += 1
-        }
-        false
-      }
-
-      override def next(): InternalRow = {
-        if (!rowReady && !hasNext) throw new NoSuchElementException
-        rowReady = false
-        bufPos += 1; remaining -= 1; localIdx += 1
-        row
-      }
-
-      private def decodePlan(pl: (Int, XptColumn, SasCore.Kind, Boolean,
-          DoubleLabelLut, Map[String, String]), base: Int, rowIdx: Long): Any = {
-        val c: XptColumn = pl._2
-        val kind: SasCore.Kind = pl._3
-        val indicator: Boolean = pl._4
-        val labels: DoubleLabelLut = pl._5
-        val charLabels: Map[String, String] = pl._6
-        if (c == null) { rowIdx }
-          else if (indicator) {
-            // XPT tagged missing: first byte '.'/'A'-'Z'/'_' IS the tag
-            val off = base + c.offset
-            if (XptCore.isMissing(buf, off, c.width)) {
-              val t = buf(off).toChar
-              if (t >= 'A' && t <= 'Z') UTF8String.fromString("." + t)
-              else if (t == '_') UTF8String.fromString("._")
-              else null
-            } else null
-          } else {
-          val off = base + c.offset
-          val v: Any =
-            if (c.isChar) {
-              var end = off + c.width
-              while (end > off && (buf(end - 1) == ' ' || buf(end - 1) == 0)) end -= 1
-              if (end == off) {
-                if (opts.missingStringAsNull) null else UTF8String.fromString("")
-              } else {
-                val s = new String(buf, off, end - off,
-                  java.nio.charset.StandardCharsets.ISO_8859_1)
-                // char-format catalog labels (matched codes map,
-                // unmatched pass through — reference replace_strict)
-                UTF8String.fromString(
-                  if (charLabels != null) charLabels.getOrElse(s, s) else s)
-              }
-            } else if (XptCore.isMissing(buf, off, c.width)) null
-            else {
-              val d = XptCore.ibmToDouble(buf, off, c.width)
-              if (d.isNaN || d.isInfinite) null
-              else if (labels != null) {
-                // catalog label switch: same integral rendering fallback
-                // as the sas7bdat reader for unlabeled codes
-                val label = labels.get(d)
-                if (label != null) label
-                else UTF8String.fromString(NumRender.code(d))
-              }
-              else kind match {
-                case SasCore.KDate => SasCore.toDateDays(d)
-                case SasCore.KDatetime => SasCore.toDatetimeMicros(d)
-                case SasCore.KTime => SasCore.toTimeNanos(d)
-                case _ => d
-              }
-            }
-          v
-          }
-      }
-    }
-  }
-
-  // ---- vectorized decode path ----
-
-  /** Columnar decode covers the plain configurations plus catalog label
-    * decode plus column-mode informative-null indicators (r12;
-    * struct/merged modes fail the name/type check below). */
-  override def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = {
-    if (opts.compress ||
-      opts.schemaOverrides.nonEmpty) return false
-    val nat = schema(path, opts)
-    val byName = nat.fields.map(f => f.name -> f.dataType).toMap
-    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
-  }
-
-  override def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required, Array.empty)
 
   /** Per-column tight loops over fixed-width 80-byte-aligned chunks;
     * trailing all-space padding rows (only possible inside the file's
@@ -581,22 +378,7 @@ object XptModule extends FormatModule {
         val buf = new Array[Byte](n * rowLen)
         raf.readFully(buf)
         // truncate trailing all-space padding rows in the final record
-        var r = 0
-        var cut = -1
-        while (cut < 0 && r < n) {
-          val endAbs = md.dataOffset + (globalRow + r + 1) * rowLen
-          if (endAbs > fileLen - 80) {
-            val base = r * rowLen
-            var allSpace = true
-            var i = base
-            while (allSpace && i < base + rowLen) {
-              if (buf(i) != ' ') allSpace = false
-              i += 1
-            }
-            if (allSpace) cut = r
-          }
-          r += 1
-        }
+        val cut = paddingCut(md, fileLen, buf, globalRow, n)
         if (cut >= 0) { n = cut; remaining = 0 }
         val startRow = globalRow
         remaining -= n; globalRow += n
@@ -682,7 +464,7 @@ object XptModule extends FormatModule {
         val off = col.offset
         val w = col.width
         if (indicator) {
-          // XPT tagged missing: the first byte IS the tag (row-path rule)
+          // XPT tagged missing: the first byte IS the tag
           var r = 0; var p = off
           while (r < n) {
             if (XptCore.isMissing(buf, p, w)) {

@@ -94,7 +94,7 @@ inflate. Small un-indexed files decode-skip from the data start.
 r14: POR (base-30 text, unseekable) pushes offset by resuming the
 80-char line state at its cell-boundary checkpoint and boundary-
 SKIMMING the remainder to the offset row — cell boundaries only, no
-base-30 parse, no String building — in both row and columnar decoders.
+base-30 parse, no String building.
 """,
       "dir_offset_slice" -> """
 r14 multi-file window: offset+limit over a DIRECTORY map onto the
@@ -125,9 +125,8 @@ Measured effects (same-record comparisons, sf0.1 bench files):
   with a 1-column projection an ungated whole-row copy measured ~2x SLOWER
   than not filtering at all (the copy moves 45 B/row to save an 8-byte
   decode), so such batches emit unfiltered and the residual filters them.
-- Labeled scans stay columnar under filters: label LUT columns compare on
-  their decoded label strings in the row path; the columnar bytes-predicate
-  skips label columns (their conjuncts fall to the residual).
+- Labeled scans stay columnar under filters: the bytes-predicate skips
+  label columns (their conjuncts fall to the residual).
 
 Labeled decode itself (r12): dictionary-encoded string vectors
 (DevLabelProf, 10M-row labeled dta, min-of-5): byte-array appends per cell

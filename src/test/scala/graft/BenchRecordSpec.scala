@@ -26,9 +26,12 @@ class BenchRecordSpec extends AnyFunSuite {
   }
 
   test("packLine keeps prefix order, respects the budget, counts omissions") {
-    // 200 synthetic entries at realistic name lengths — more than any
-    // budget can hold, so packing must truncate
-    val entries = (0 until 200).map(i => (f"query_entry_name_$i%03d", i / 7.0))
+    // 200 synthetic entries, every 7th with a longer name — more than
+    // any budget can hold, so packing must truncate; once a long name
+    // misses the budget, the next short one still fits, and taking it
+    // would break the prefix
+    val entries = (0 until 200).map(i =>
+      (f"query_entry_name_$i%03d" + (if (i % 7 == 6) "x" * 16 else ""), i / 7.0))
     val tail = ""","noise":[0.06],"sf":"/x","detail":"BENCH_LOCAL.json"}"""
     val line = Bench.packLine(12.345, entries, tail, 1820)
     assert(line.length <= 1820, s"line ${line.length} chars")
@@ -36,13 +39,13 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(line.endsWith(tail))
     // kept entries are exactly a PREFIX of the input order (priority
     // packing depends on this: raw reads, then touched, then the rest)
-    val kept = """"query_entry_name_(\d+)"""".r
+    val kept = """"query_entry_name_(\d+)x*"""".r
       .findAllMatchIn(line).map(_.group(1).toInt).toSeq
     assert(kept == (0 until kept.size), s"not a prefix: $kept")
     assert(kept.size >= 50, s"only ${kept.size} entries fit")
     assert(line.contains(s""","omitted":${200 - kept.size}"""))
     // 2-decimal values: entry 7 is 1.0 exactly
-    assert(line.contains(""""query_entry_name_007":1.00"""))
+    assert(line.contains(s"\"${entries(7)._1}\":1.00"))
   }
 
   test("packLine emits no omitted field when everything fits") {

@@ -2,7 +2,6 @@ package graft.readstat
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Columnar coverage: POR batch decode, dictionary-encoded label decode
@@ -10,10 +9,9 @@ import org.apache.spark.sql.functions._
   * (r12), plus compress / schemaOverrides narrowing through the
   * connector's vector-cast wrapper (r13 — the last row-only regimes).
   * Each case pins BOTH properties: the plan actually runs
-  * ColumnarToRow, and the values match the row path bit-for-bit (row
-  * path forced via the `columnar=false` escape hatch; a no-op
-  * schemaOverride no longer forces rows now that overrides decode
-  * columnar).
+  * ColumnarToRow, and the values match the retired row decoder's output
+  * on the same input, frozen as parquet goldens under
+  * `golden/rowpath` (inputs in `golden/rowpath/inputs`).
   */
 class ColumnarParitySpec extends SparkTestBase {
 
@@ -23,30 +21,10 @@ class ColumnarParitySpec extends SparkTestBase {
     d.getAbsolutePath
   }
 
-  private def assertColumnarParity(read: => DataFrame,
-      rowRead: => DataFrame, ctx: String): Unit = {
-    val df = read
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), s"$ctx not columnar:\n$plan")
-    val rows = rowRead
-    assert(!rows.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      s"$ctx: row-path forcing failed")
-    assertSameData(df, rows, ctx)
-  }
-
   test("por scan runs the columnar path with row-path parity") {
-    import spark.implicits._
-    val p = s"$dir/plain.por"
-    (1 to 4000).map(i =>
-      (i.toDouble, if (i % 7 == 0) null else s"s$i", i % 13 * 0.25))
-      .toDF("num", "txt", "frac")
-      .write.format("readstat").mode("overwrite").save(p)
-    def base = spark.read.format("readstat").load(p)
-    assertColumnarParity(
-      base,
-      spark.read.format("readstat")
-        .option("columnar", "false").load(p),
-      "por plain")
+    val p = rowPathInput("plain.por")
+    assertColumnarGolden(spark.read.format("readstat").load(p),
+      "plain.por.plain", "por plain")
     // projection skim + row index stay correct through the batch path
     val withIdx = spark.read.format("readstat")
       .option("rowIndexName", "_ri").load(p).select("frac", "_ri")
@@ -74,44 +52,21 @@ class ColumnarParitySpec extends SparkTestBase {
   }
 
   test("labeled dta scan decodes through the columnar path") {
-    import spark.implicits._
-    val p = s"$dir/lab.dta"
     // codes beyond the label table exercise the code-form fallback;
     // nulls exercise missing handling inside the labeled loop
-    (1 to 5000).map(i =>
-      (if (i % 11 == 0) null else Integer.valueOf(i % 7), i * 1.5))
-      .toDF("code", "x")
-      .write.format("readstat").mode("overwrite")
-      .option("valueLabels", "code:1=One,2=Two,3=Three").save(p)
+    val p = rowPathInput("lab.dta")
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
-      "dta labeled")
+    assertColumnarGolden(labeled, "lab.dta.plain", "dta labeled")
     val vals = labeled.select("code").distinct().collect().map(_.getString(0)).toSet
     assert(vals == Set(null, "One", "Two", "Three", "0", "4", "5", "6"))
   }
 
   test("labeled sav scan decodes through the columnar path") {
-    import spark.implicits._
-    val p = s"$dir/lab.sav"
-    (1 to 5000).map(i =>
-      (if (i % 11 == 0) null else Integer.valueOf(i % 5),
-        if (i % 3 == 0) "ab" else "zz", i * 0.5))
-      .toDF("sex", "tag", "x")
-      .write.format("readstat").mode("overwrite")
-      .option("valueLabels", "sex:1=Male,2=Female|tag:ab=Alpha").save(p)
+    val p = rowPathInput("lab.sav")
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
-      "sav labeled")
+    assertColumnarGolden(labeled, "lab.sav.plain", "sav labeled")
     val sexes = labeled.select("sex").distinct().collect().map(_.getString(0)).toSet
     assert(sexes == Set(null, "Male", "Female", "0", "3", "4"))
     val tags = labeled.select("tag").distinct().collect().map(_.getString(0)).toSet
@@ -119,44 +74,23 @@ class ColumnarParitySpec extends SparkTestBase {
   }
 
   test("labeled por scan decodes through the columnar path") {
-    import spark.implicits._
-    val p = s"$dir/lab.por"
-    (1 to 3000).map(i => (Integer.valueOf(i % 4), i * 2.0))
-      .toDF("grade", "x")
-      .write.format("readstat").mode("overwrite")
-      .option("valueLabels", "grade:1=Low,2=Mid,3=High").save(p)
+    val p = rowPathInput("lab.por")
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
-      "por labeled")
+    assertColumnarGolden(labeled, "lab.por.plain", "por labeled")
     val vals = labeled.select("grade").distinct().collect().map(_.getString(0)).toSet
     assert(vals == Set("0", "Low", "Mid", "High"))
   }
 
   test("catalog-labeled xpt and sas7bdat scans decode through the columnar path") {
-    import spark.implicits._
     for (ext <- Seq("xpt", "sas7bdat")) {
-      val p = s"$dir/lab.$ext"
-      (1 to 4000).map(i => (Integer.valueOf(i % 4).doubleValue(),
-        if (i % 3 == 0) "ab" else "zz", i * 1.5))
-        .toDF("sex", "tag", "x")
-        .write.format("readstat").mode("overwrite")
-        .option("valueLabels", "sex:1=Male,2=Female|tag:ab=Alpha").save(p)
+      val name = if (ext == "xpt") "lab_xpt.xpt" else "lab_sas.sas7bdat"
+      val p = rowPathInput(name)
       val catPath = p.stripSuffix(s".$ext") + ".sas7bcat"
       def labeled = spark.read.format("readstat")
         .option("catalog", catPath)
         .option("valueLabelsAsStrings", "true").load(p)
-      assertColumnarParity(
-        labeled,
-        spark.read.format("readstat")
-          .option("catalog", catPath)
-          .option("valueLabelsAsStrings", "true")
-          .option("columnar", "false").load(p),
-        s"$ext catalog-labeled")
+      assertColumnarGolden(labeled, s"$name.plain", s"$ext catalog-labeled")
       val sexCol = if (ext == "xpt") "SEX" else "sex"
       val tagCol = if (ext == "xpt") "TAG" else "tag"
       val sexes = labeled.select(sexCol).distinct().collect().map(_.getString(0)).toSet
@@ -167,34 +101,14 @@ class ColumnarParitySpec extends SparkTestBase {
   }
 
   test("informativeNulls (column mode) runs columnar on dta/sav/xpt/sas7bdat") {
-    import spark.implicits._
     // dta + xpt + sas7bdat: .a-.z tagged missings driven by an indicator
     // column on write, re-derived on read
     for (ext <- Seq("dta", "xpt", "sas7bdat")) {
-      val p = s"$dir/inul.$ext"
-      // dta tags are .a-.z; the SAS family writes .A-.Z
-      val (ta, tz) = if (ext == "dta") (".a", ".z") else (".A", ".Z")
-      (1 to 3000).map { i =>
-        val tag = i % 7 match {
-          case 0 => ta
-          case 3 => tz
-          case _ => null
-        }
-        (if (tag == null) java.lang.Double.valueOf(i.toDouble) else null,
-          tag, i.toDouble)
-      }.toDF("v", "v_null", "ord")
-        .write.format("readstat").mode("overwrite")
-        .option("taggedMissings", "v:v_null").save(p)
+      val p = rowPathInput(s"inul.$ext")
       def read = spark.read.format("readstat")
         .option("informativeNulls", "true")
         .option("informativeNullUseValueLabels", "false").load(p)
-      assertColumnarParity(
-        read,
-        spark.read.format("readstat")
-          .option("informativeNulls", "true")
-          .option("informativeNullUseValueLabels", "false")
-          .option("columnar", "false").load(p),
-        s"$ext informativeNulls")
+      assertColumnarGolden(read, s"inul.$ext.plain", s"$ext informativeNulls")
       val vCol = if (ext == "dta") "v_null" else "V_null"
       val ordCol = if (ext == "dta") "ord" else "ORD"
       val inds = read.orderBy(ordCol).select(vCol).collect()
@@ -205,22 +119,9 @@ class ColumnarParitySpec extends SparkTestBase {
         s"$ext: ${inds.take(8).mkString(",")}")
     }
     // sav: declared discrete user-missings + a string missing value
-    val p = s"$dir/inul.sav"
-    (1 to 3000).map(i =>
-      (java.lang.Double.valueOf((i % 10).toDouble),
-        if (i % 5 == 0) "NA" else s"ok$i", i.toDouble))
-      .toDF("q", "s", "ord")
-      .write.format("readstat").mode("overwrite")
-      .option("valueLabels", "q:9=Refused")
-      .option("missingValues", "q:9|s:NA").save(p)
     def savRead = spark.read.format("readstat")
-      .option("informativeNulls", "true").load(p)
-    assertColumnarParity(
-      savRead,
-      spark.read.format("readstat")
-        .option("informativeNulls", "true")
-        .option("columnar", "false").load(p),
-      "sav informativeNulls")
+      .option("informativeNulls", "true").load(rowPathInput("inul.sav"))
+    assertColumnarGolden(savRead, "inul.sav.plain", "sav informativeNulls")
     val qInds = savRead.select("q_null").distinct().collect()
       .map(r => Option(r.getString(0)).orNull).toSet
     assert(qInds == Set(null, "Refused"), qInds.toString) // label beats code
@@ -230,21 +131,9 @@ class ColumnarParitySpec extends SparkTestBase {
 
     // por: sav-semantics indicators through the por columnar path, with
     // a pushed filter layered on top (prefix-buffered indicator flush)
-    val pp = s"$dir/inul.por"
-    (1 to 3000).map(i =>
-      (java.lang.Double.valueOf((i % 10).toDouble), i.toDouble))
-      .toDF("q", "ord")
-      .write.format("readstat").mode("overwrite")
-      .option("valueLabels", "q:9=Refused")
-      .option("missingValues", "q:9").save(pp)
     def porRead = spark.read.format("readstat")
-      .option("informativeNulls", "true").load(pp)
-    assertColumnarParity(
-      porRead,
-      spark.read.format("readstat")
-        .option("informativeNulls", "true")
-        .option("columnar", "false").load(pp),
-      "por informativeNulls")
+      .option("informativeNulls", "true").load(rowPathInput("inul.por"))
+    assertColumnarGolden(porRead, "inul.por.plain", "por informativeNulls")
     val pInds = porRead.select("Q_null").distinct().collect()
       .map(r => Option(r.getString(0)).orNull).toSet
     assert(pInds == Set(null, "Refused"), pInds.toString)
@@ -272,25 +161,13 @@ class ColumnarParitySpec extends SparkTestBase {
   }
 
   test("compress narrowing runs columnar through the vector-cast wrapper (r13)") {
-    import spark.implicits._
-    val p = s"$dir/cmp.dta"
     // int-valued doubles (→ int8/int16), 0/1 (→ boolean), midnight
     // timestamps (→ date), numeric strings (→ double), plus a genuinely
     // fractional column that must stay double
-    (1 to 6000).map { i =>
-      (i % 2 * 1.0, (i % 100).toDouble, (i % 20000 - 10000).toDouble,
-        i * 0.25, (i % 50).toString,
-        java.sql.Timestamp.valueOf(f"2020-05-${i % 28 + 1}%02d 00:00:00"))
-    }.toDF("flag", "small", "wide", "frac", "numstr", "ts")
-      .write.format("readstat").mode("overwrite").save(p)
     def compressed = spark.read.format("readstat")
-      .option("compress", "true").option("compressProbeRows", "6000").load(p)
-    assertColumnarParity(
-      compressed,
-      spark.read.format("readstat")
-        .option("compress", "true").option("compressProbeRows", "6000")
-        .option("columnar", "false").load(p),
-      "dta compress")
+      .option("compress", "true").option("compressProbeRows", "6000")
+      .load(rowPathInput("cmp.dta"))
+    assertColumnarGolden(compressed, "cmp.dta.plain", "dta compress")
     val sch = compressed.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     assert(sch("flag") == "BOOLEAN" && sch("small") == "TINYINT" &&
       sch("wide") == "SMALLINT" && sch("frac") == "DOUBLE" &&
@@ -301,19 +178,10 @@ class ColumnarParitySpec extends SparkTestBase {
   }
 
   test("schemaOverrides run columnar through the vector-cast wrapper (r13)") {
-    import spark.implicits._
-    val p = s"$dir/ovr.sav"
-    (1 to 4000).map(i => ((i % 120).toDouble, i.toDouble, s"${i % 7}"))
-      .toDF("a", "b", "s")
-      .write.format("readstat").mode("overwrite").save(p)
+    val p = rowPathInput("ovr.sav")
     def overridden = spark.read.format("readstat")
       .option("schemaOverrides", "a TINYINT, s DOUBLE").load(p)
-    assertColumnarParity(
-      overridden,
-      spark.read.format("readstat")
-        .option("schemaOverrides", "a TINYINT, s DOUBLE")
-        .option("columnar", "false").load(p),
-      "sav overrides")
+    assertColumnarGolden(overridden, "ovr.sav.plain", "sav overrides")
     val sch = overridden.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     assert(sch("a") == "TINYINT" && sch("b") == "DOUBLE" && sch("s") == "DOUBLE")
     // untouched column passes through by reference; strict downcast

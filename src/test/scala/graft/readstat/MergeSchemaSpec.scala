@@ -68,6 +68,26 @@ class MergeSchemaSpec extends SparkTestBase {
     assert(agg.getLong(2) == 3L) // x present in a.dta (2 rows) + c.sav (1 row)
   }
 
+  test("mergeSchema unions names case-insensitively across dta, xpt and por") {
+    import spark.implicits._
+    // the xpt and por writers upper-case names: ID / V in those files
+    val d = Files.createTempDirectory("graft_merge_case").toFile
+    d.deleteOnExit()
+    val frame = (1 to 40).map(i => (i, i * 0.5)).toDF("id", "v")
+    val paths = Seq("dta", "xpt", "por").map { ext =>
+      val p = s"$d/f.$ext"
+      frame.write.format("readstat").mode("overwrite").save(p)
+      p
+    }
+    val df = spark.read.format("readstat").option("mergeSchema", "true")
+      .load(paths: _*)
+    assert(df.columns.toSeq == Seq("id", "v"), df.columns.mkString(","))
+    val ids = df.select("id")
+    assert(ids.count() == 120L)
+    assert(ids.agg(sum("id")).collect()(0).getDouble(0) == 3 * (1 to 40).sum)
+    assert(df.agg(sum("v")).collect()(0).getDouble(0) == 3 * (1 to 40).map(_ * 0.5).sum)
+  }
+
   test("schema drift without mergeSchema is a descriptive error") {
     val df = spark.read.format("readstat")
       .load(s"$dir/a.dta", s"$dir/b.dta") // schema = a.dta's: id, x, shared

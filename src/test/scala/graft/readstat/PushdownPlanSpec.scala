@@ -99,32 +99,19 @@ class PushdownPlanSpec extends SparkTestBase {
 
   test("compressed SAS pages (RLE and RDC) run the columnar path") {
     // test2 = SASYZCRL (RLE), test.sas7bdat = SASYZCR2 (RDC, 10k rows);
-    // both must plan ColumnarToRow and match the row path value-for-value
-    // (row path forced via the columnar=false escape hatch)
-    for (fixture <- Seq("fixtures/sas/test2.sas7bdat", "fixtures/sas/test.sas7bdat")) {
-      val path = res(fixture)
-      val df = spark.read.format("readstat").load(path)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("ColumnarToRow"), s"$fixture not columnar:\n$plan")
-      val rowPath = spark.read.format("readstat")
-        .option("columnar", "false").load(path)
-      assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      assertSameData(df, rowPath, fixture)
-    }
+    // both must plan ColumnarToRow and match the row-path goldens
+    // value-for-value
+    for (fixture <- Seq("test2.sas7bdat", "test.sas7bdat"))
+      assertColumnarGolden(
+        spark.read.format("readstat").load(res(s"fixtures/sas/$fixture")),
+        s"$fixture.plain", fixture)
   }
 
   test("compressed SPSS (bytecode and zsav) runs the columnar path") {
-    for (fixture <- Seq("fixtures/spss/sample.sav", "fixtures/spss/sample.zsav",
-        "fixtures/spss/sample_large.sav")) {
-      val path = res(fixture)
-      val df = spark.read.format("readstat").load(path)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("ColumnarToRow"), s"$fixture not columnar:\n$plan")
-      val rowPath = spark.read.format("readstat")
-        .option("columnar", "false").load(path)
-      assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      assertSameData(df, rowPath, fixture)
-    }
+    for (fixture <- Seq("sample.sav", "sample.zsav", "sample_large.sav"))
+      assertColumnarGolden(
+        spark.read.format("readstat").load(res(s"fixtures/spss/$fixture")),
+        s"$fixture.plain", fixture)
   }
 
   test("override scans stay columnar (r13 vector cast) with same results") {

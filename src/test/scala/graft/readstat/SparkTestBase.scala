@@ -14,6 +14,21 @@ trait SparkTestBase extends AnyFunSuite {
     url.getPath
   }
 
+  /** A generated input frozen beside the row-path goldens. */
+  def rowPathInput(name: String): String = res(s"golden/rowpath/inputs/$name")
+
+  /** The retired row decoder's output for one (input, regime) case,
+    * frozen as parquet (generator: tools/rowpath_goldens). */
+  def rowPathGolden(name: String): DataFrame =
+    spark.read.parquet(res(s"golden/rowpath/$name.parquet"))
+
+  /** The read runs the columnar scan and equals its row-path golden. */
+  def assertColumnarGolden(read: DataFrame, golden: String, ctx: String): Unit = {
+    val plan = read.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), s"$ctx not columnar:\n$plan")
+    assertSameData(read, rowPathGolden(golden), ctx)
+  }
+
   /** Normalize a frame for cross-engine value comparison: strings stay
     * strings (null→""), temporals → epoch seconds as double, numerics →
     * double with null→NaN. Mirrors the reference's dtype-normalized
@@ -21,7 +36,7 @@ trait SparkTestBase extends AnyFunSuite {
     */
   def normalize(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      val c = col(f.name)
+      val c = col("`" + f.name.replace("`", "``") + "`")
       f.dataType match {
         case StringType => coalesce(c, lit("")).as(f.name)
         case DateType =>

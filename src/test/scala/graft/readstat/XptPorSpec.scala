@@ -625,6 +625,23 @@ class XptPorSpec extends SparkTestBase {
     assert(got(59) == "r60")
   }
 
+  test("xpt fileMetadata row_count excludes the final record's padding rows") {
+    import spark.implicits._
+    // 8-byte rows: up to 9 all-space padding slots in the last 80-byte
+    // record; 24-byte rows: up to 3
+    for (cols <- Seq(1, 3); n <- 1 to 25) {
+      val p = tmp(s"pad_${cols}_$n.xpt")
+      val df = (1 to n).map(i => (i * 1.5, i * 2.0, i * 3.0)).toDF("a", "b", "c")
+      df.select(df.columns.take(cols).map(col).toIndexedSeq: _*)
+        .write.format("readstat").mode("overwrite").save(p)
+      val meta = graft.api.Readstat.fileMetadata(spark, p)
+        .select("row_count").collect()(0).getLong(0)
+      val read = spark.read.format("readstat").load(p)
+      assert(meta == read.count() && meta == read.collect().length && meta == n,
+        s"$cols cols, $n rows: row_count $meta")
+    }
+  }
+
   test("xpt and por row index columns") {
     val x = spark.read.format("readstat")
       .option("rowIndexName", "_i").load(s"$refXpt/ACQ_G.xpt")
